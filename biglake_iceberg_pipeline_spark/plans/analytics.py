@@ -601,16 +601,16 @@ def _mor_table_path(spark: SparkSession, sf_dir: str) -> str:
 
 def lakehouse_mor_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Range read THROUGH the batch connector of a table with an
-    UNMATERIALIZED merge-on-read delete tail (streaming/source.py
-    F45): the planner ships each pruned file its own overlay —
-    voided positions in the partition payload, equality-delete files
-    by reference scoped by added_at watermark + footer key ranges —
-    and the executor drops the rows with the NULL-safe vectorized
-    is_in, mirroring the native read's broadcast anti-joins
-    (sinks/lakehouse.py `_apply_deletes`). Pushed range filters
-    still prune files first; the overlay composes with pruning
-    rather than forcing a full scan. This is the read path a 100 TB
-    table lives on between a MoR DELETE/MERGE and its next
+    UNMATERIALIZED merge-on-read delete tail (F45): the delete
+    planner (sinks/deletes.py `plan_deletes`) ships each pruned file
+    its own overlay — voided positions in the partition payload,
+    equality-delete files by reference scoped by added_at watermark
+    + footer key ranges — and the executor drops the rows with the
+    NULL-safe vectorized is_in, mirroring the native read's
+    broadcast anti-joins (sinks/deletes.py `apply_deletes`). Pushed
+    range filters still prune files first; the overlay composes with
+    pruning rather than forcing a full scan. This is the read path a
+    100 TB table lives on between a MoR DELETE/MERGE and its next
     compaction.
 
     Enables ``spark.sql.python.filterPushdown.enabled`` at runtime —

@@ -47,6 +47,22 @@ from datetime import datetime, timezone
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from biglake_iceberg_pipeline_spark.sinks.deletes import (
+    apply_deletes,
+    by_kind,
+    coordinate_frame,
+    delete_kind,
+    encode_dv,
+    eq_delete_join,
+    plan_deletes,
+    pos_delete_file_clustered,
+)
+# re-exported: callers import the deletion-vector codec from here
+from biglake_iceberg_pipeline_spark.sinks.deletes import (  # noqa: F401
+    decode_dv,
+    dv_affected_files,
+    dv_coordinates,
+)
 from biglake_iceberg_pipeline_spark.sinks.fileio import fileio_for
 from biglake_iceberg_pipeline_spark.operators.schema_evolution import (
     align_for_append,
@@ -200,143 +216,6 @@ def _transform_bounds(e: dict, lo, hi):
         return b, b
     return None
 
-
-
-def eq_delete_may_hit(
-    keys: list[str],
-    d_has_null: dict,
-    dranges: dict,
-    file_stats: dict,
-    file_nulls_fn=None,
-) -> bool:
-    """Equality-delete candidate test shared by
-    ``materialize_deletes`` and the CDF stream planner (one
-    implementation so the two can never drift): True iff the data
-    file MAY contain a row matching some delete key tuple.
-
-    ``d_has_null[k]`` — the delete file may carry a NULL for key k
-    (missing → True, conservative). ``dranges[k]`` — the delete
-    values' [min, max] over non-NULL entries (None → unknown).
-    ``file_stats`` — the data file's footer ranges.
-    ``file_nulls_fn`` — optional lazy getter for the data file's
-    footer null counts; when the delete carries a NULL key, a file
-    PROVABLY without NULLs in that key can still prune by range,
-    otherwise it is kept (the read overlay matches NULL keys via
-    eqNullSafe). Mixed-type comparisons keep the file."""
-    for k in keys:
-        if d_has_null.get(k, True):
-            fn = file_nulls_fn() if file_nulls_fn is not None else None
-            if fn is None or fn.get(k, 1) or fn.get(k) is None:
-                continue  # NULL↔NULL possible: keep the file
-        dr = dranges.get(k)
-        fr = file_stats.get(k)
-        if dr is None or fr is None:
-            continue  # unknown range: keep (conservative)
-        try:
-            if dr[1] < fr[0] or dr[0] > fr[1]:
-                return False
-        except TypeError:
-            continue  # mixed types: keep
-    return True
-
-
-def encode_dv(positions) -> bytes:
-    """Deletion-vector blob for ONE data file's voided row positions
-    (Iceberg v3's deletion vectors, re-expressed portably): sorted
-    deduplicated int64 positions, delta-encoded (first value
-    absolute), packed little-endian, deflated. Dense runs delta to
-    streams of 1s that deflate to well under a byte per position;
-    decode is two vectorized numpy passes — no bit-twiddling a
-    Python loop would pay for. Empty input encodes to b''."""
-    import zlib
-
-    import numpy as np
-
-    arr = np.unique(np.asarray(list(positions), dtype=np.int64))
-    if arr.size == 0:
-        return b""
-    deltas = np.diff(arr, prepend=np.int64(0))
-    return zlib.compress(deltas.astype("<i8").tobytes(), 6)
-
-
-def decode_dv(blob) -> "object":
-    """Inverse of ``encode_dv``: the sorted voided positions as an
-    int64 numpy array."""
-    import zlib
-
-    import numpy as np
-
-    if not blob:
-        return np.empty(0, dtype=np.int64)
-    deltas = np.frombuffer(
-        zlib.decompress(bytes(blob)), dtype="<i8"
-    )
-    return np.cumsum(deltas).astype(np.int64)
-
-
-def dv_coordinates(spark: SparkSession, paths: list[str]) -> DataFrame:
-    """Deletion-vector blob files as a distributed (file_path, pos)
-    coordinate frame: blobs decode in an Arrow-batched pandas UDF
-    and explode to the same coordinates position-delete files store
-    — the ONE decode-and-explode implementation every driver-side DV
-    consumer (read overlay, tail rewrite) shares, so a blob-format
-    change can never make them drift. Executor-side per-file reads
-    (`_mor_overlay_batches`) instead filter to their own row and
-    call ``decode_dv`` directly."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("array<long>")
-    def _dv_positions(blobs):
-        return blobs.map(lambda b: decode_dv(b).tolist())
-
-    return spark.read.parquet(*paths).select(
-        "file_path", F.explode(_dv_positions("dv")).alias("pos")
-    )
-
-
-def pos_delete_file_clustered(path: str) -> bool:
-    """True iff a position-delete file's row-group file_path spans
-    are sorted and non-overlapping — the property by-reference
-    readers (F50) prune row groups with. A single delete commit can
-    write one big file in scan-partition order; such a file is NOT
-    consolidated even though the tail length is 1, and
-    ``rewrite_position_deletes`` must re-cluster it. Metadata-only:
-    missing stats → not clustered (conservative rewrite)."""
-    import pyarrow.parquet as pq
-
-    pf = pq.ParquetFile(path)
-    names = list(pf.schema_arrow.names)
-    try:
-        idx = names.index("file_path")
-    except ValueError:
-        return False
-    md = pf.metadata
-    prev_hi = None
-    for rg in range(md.num_row_groups):
-        st = md.row_group(rg).column(idx).statistics
-        if st is None or not st.has_min_max:
-            return False
-        lo, hi = st.min, st.max
-        if isinstance(lo, bytes):
-            lo, hi = lo.decode(), hi.decode()
-        if prev_hi is not None and lo < prev_hi:
-            return False  # overlapping / unsorted spans
-        prev_hi = hi
-    return True
-
-
-def dv_affected_files(path: str) -> list[str]:
-    """The data files a deletion-vector blob file names — its own
-    file_path column, one row per file, metadata-sized (no blob is
-    decoded). Shared by ``materialize_deletes`` and the connector's
-    overlay planner."""
-    import pyarrow.parquet as pq
-
-    return (
-        pq.read_table(path, columns=["file_path"])
-        .column("file_path")
-        .to_pylist()
-    )
 
 
 class _SnapshotChain:
@@ -1223,6 +1102,19 @@ class SnapshotNotFoundError(ValueError):
     predating the typed hierarchy keep working; incremental consumers
     catch THIS (not message substrings) to decide 're-baseline from a
     full read'."""
+
+
+def _snapshot(manifest: dict, snapshot_id: int | None) -> dict | None:
+    """The log entry of ``snapshot_id`` — the current snapshot for
+    None (None on an empty table). Raises SnapshotNotFoundError when
+    the id is not in the log."""
+    snaps = manifest["snapshots"]
+    if snapshot_id is None:
+        return snaps[-1] if snaps else None
+    for s in snaps:
+        if s["id"] == snapshot_id:
+            return s
+    raise SnapshotNotFoundError(f"snapshot {snapshot_id} not found")
 
 
 class LineageBrokenError(ValueError):
@@ -2628,17 +2520,10 @@ class LakehouseTable:
         outstanding EQUALITY deletes make the count unknowable from
         metadata (how many older rows match the keys needs a scan) —
         None until compaction materializes them."""
-        snaps = self.snapshots
-        if not snaps:
-            return 0
-        if snapshot_id is None:
-            snap = snaps[-1]
-        else:
-            matches = [s for s in snaps if s["id"] == snapshot_id]
-            if not matches:
-                raise SnapshotNotFoundError(f"snapshot {snapshot_id} not found")
-            snap = matches[0]
         manifest = self._read_manifest()
+        if not manifest["snapshots"]:
+            return 0
+        snap = _snapshot(manifest, snapshot_id)
         rows = manifest.get("file_rows", {})
         total = 0
         for f in snap["files"]:
@@ -2647,7 +2532,7 @@ class LakehouseTable:
             total += rows[f]
         dmeta = manifest.get("delete_meta", {})
         for d in snap.get("deletes", []):
-            kind = dmeta.get(d, {}).get("kind", "position")
+            kind = delete_kind(manifest, d)
             if kind == "dv":
                 # deletion vector: the blob file's parquet row count
                 # is #affected files; the voided-position total was
@@ -2923,7 +2808,7 @@ class LakehouseTable:
             surv_files: list[str] = []
             if cand:
                 cur = self._read_files(spark, cand, with_meta=True)
-                cur = self._apply_deletes(
+                cur = apply_deletes(
                     spark, cur, manifest, snap.get("deletes", [])
                 )
                 survivors = self._reshape_for_sort_order(
@@ -3268,7 +3153,7 @@ class LakehouseTable:
         if isinstance(condition, str):
             condition = F.expr(condition)
         df = self._read_files(spark, snap["files"], with_meta=True)
-        df = self._apply_deletes(
+        df = apply_deletes(
             spark, df, manifest, snap.get("deletes", [])
         )
         data_cols = [
@@ -3731,16 +3616,8 @@ class LakehouseTable:
         is just a different union over the same sketch pool."""
         import base64
 
-        snaps = self.snapshots
-        if snapshot_id is None:
-            live = snaps[-1]["files"] if snaps else []
-        else:
-            matches = [s for s in snaps if s["id"] == snapshot_id]
-            if not matches:
-                raise SnapshotNotFoundError(
-                    f"snapshot {snapshot_id} not found"
-                )
-            live = matches[0]["files"]
+        snap = _snapshot(self._read_manifest(), snapshot_id)
+        live = snap["files"] if snap else []
         if refresh:
             self.refresh_ndv_sketches(spark, files=live)
         sketches = self._ndv_sketches(live)
@@ -3879,20 +3756,18 @@ class LakehouseTable:
         travel still reaches them; expire_snapshots reclaims them) and
         concurrent readers never see a gap. No data is rewritten —
         this is a metadata-only commit."""
-        snaps = self.snapshots
-        match = [s for s in snaps if s["id"] == snapshot_id]
-        if not match:
-            raise SnapshotNotFoundError(f"snapshot {snapshot_id} not found")
+        manifest = self._read_manifest()
+        target = _snapshot(manifest, snapshot_id)
         snap = self._locked_commit(
             "rollback",
-            list(match[0]["files"]),
+            list(target["files"]),
             {},
             None,
-            expected_tail=snaps[-1]["id"],
+            expected_tail=manifest["snapshots"][-1]["id"],
             # the rolled-back-to state includes its delete tail: a
             # snapshot with outstanding merge-on-read deletes must not
             # resurrect deleted rows on rollback
-            delete_files=list(match[0].get("deletes", [])),
+            delete_files=list(target.get("deletes", [])),
         )[0]
         self._fire_commit_hooks("rollback", snap)
         return snap
@@ -4324,9 +4199,7 @@ class LakehouseTable:
             snaps = manifest["snapshots"]
             if not snaps:
                 raise ValueError("cannot tag an empty table")
-            sid = snaps[-1]["id"] if snapshot_id is None else snapshot_id
-            if not any(s["id"] == sid for s in snaps):
-                raise SnapshotNotFoundError(f"snapshot {sid} not found")
+            sid = _snapshot(manifest, snapshot_id)["id"]
             tags = manifest.setdefault("tags", {})
             if name in tags and tags[name] != sid and not replace:
                 raise ValueError(
@@ -4400,20 +4273,8 @@ class LakehouseTable:
             branches = manifest.setdefault("branches", {})
             if name in branches:
                 raise ValueError(f"branch {name!r} already exists")
-            snaps = manifest["snapshots"]
-            if from_snapshot is None:
-                base = snaps[-1]["id"] if snaps else None
-            else:
-                if not any(s["id"] == from_snapshot for s in snaps):
-                    raise SnapshotNotFoundError(
-                        f"snapshot {from_snapshot} not found"
-                    )
-                base = from_snapshot
-            base_snap = (
-                next(s for s in snaps if s["id"] == base)
-                if base is not None
-                else None
-            )
+            base_snap = _snapshot(manifest, from_snapshot)
+            base = base_snap["id"] if base_snap else None
             branches[name] = {
                 "base": base,
                 "base_files": list(
@@ -5597,9 +5458,11 @@ class LakehouseTable:
     #   * equality deletes: key rows that void any OLDER data row with
     #     a matching key (written by merge(mode="merge-on-read")).
     # Readers overlay them as broadcast anti-joins; compaction
-    # materializes them back into plain data files. This is Iceberg's
-    # format-v2 row-level delete design re-expressed on the JSON
-    # manifest: the commit costs O(matched rows), reads cost one extra
+    # materializes them back into plain data files. The tail format,
+    # its kinds and the added_at scoping live in sinks/deletes.py;
+    # this class only writes delete files and commits them. This is
+    # Iceberg's format-v2 row-level delete design re-expressed on the
+    # JSON manifest: the commit costs O(matched rows), reads cost one extra
     # broadcast join until the next compaction.
 
     def _write_delete_file(self, df: DataFrame) -> list[str]:
@@ -5619,106 +5482,6 @@ class LakehouseTable:
                 if n.endswith(".parquet")
             ]
         return sorted(found)
-
-    def _apply_deletes(
-        self,
-        spark: SparkSession,
-        df: DataFrame,
-        manifest: dict,
-        delete_paths: list[str],
-    ) -> DataFrame:
-        """Overlay a snapshot's delete files onto a ``with_meta`` read.
-        Position deletes anti-join on (__file, __pos); equality
-        deletes anti-join on their key columns, scoped to data files
-        with added_at <= the delete's applies_to watermark (a row
-        appended AFTER the delete committed must survive even if its
-        key matches — Iceberg's sequence-number scoping). Delete files
-        and the added_at map are metadata-sized → broadcast; the data
-        side stays one scan with no shuffle."""
-        meta = manifest.get("delete_meta", {})
-        pos = [
-            p
-            for p in delete_paths
-            if meta.get(p, {}).get("kind", "position") == "position"
-        ]
-        eqs = [
-            p
-            for p in delete_paths
-            if meta.get(p, {}).get("kind") == "equality"
-        ]
-        dvs = [
-            p
-            for p in delete_paths
-            if meta.get(p, {}).get("kind") == "dv"
-        ]
-        coords = None
-        if pos:
-            coords = spark.read.parquet(*pos).select(
-                F.col("file_path").alias("__del_file"),
-                F.col("pos").alias("__del_pos"),
-            )
-        if dvs:
-            # deletion vectors (rewrite_position_deletes(as_dv=True)):
-            # one row per affected file, positions as a delta+deflate
-            # blob — decode distributed (Arrow-batched), explode to
-            # the same (file, pos) coordinates the anti-join keys on
-            decoded = dv_coordinates(spark, dvs).select(
-                F.col("file_path").alias("__del_file"),
-                F.col("pos").alias("__del_pos"),
-            )
-            coords = (
-                decoded
-                if coords is None
-                else coords.unionByName(decoded)
-            )
-        if coords is not None:
-            df = df.join(
-                F.broadcast(coords),
-                (F.col("__file") == F.col("__del_file"))
-                & (F.col("__pos") == F.col("__del_pos")),
-                "left_anti",
-            )
-        if eqs:
-            added = manifest.get("file_added_at", {})
-            amap = spark.createDataFrame(
-                [(f, int(a)) for f, a in added.items()],
-                schema="__file_a string, __added_at long",
-            )
-            df = df.join(
-                F.broadcast(amap),
-                F.col("__file") == F.col("__file_a"),
-                "left",
-            ).drop("__file_a")
-            from collections import defaultdict
-
-            by_keys: dict[tuple, list[str]] = defaultdict(list)
-            for p in eqs:
-                by_keys[tuple(meta[p]["keys"])].append(p)
-            for keys, paths in by_keys.items():
-                frames = None
-                for p in paths:
-                    d = spark.read.parquet(p).select(
-                        *[
-                            F.col(k).alias(f"__eq_{k}")
-                            for k in keys
-                        ],
-                        F.lit(int(meta[p]["applies_to"])).alias(
-                            "__eq_applies"
-                        ),
-                    )
-                    frames = (
-                        d if frames is None else frames.unionByName(d)
-                    )
-                cond = F.coalesce(
-                    F.col("__added_at"), F.lit(2**62)
-                ) <= F.col("__eq_applies")
-                for k in keys:
-                    cond = cond & F.col(k).eqNullSafe(
-                        F.col(f"__eq_{k}")
-                    )
-                df = df.join(F.broadcast(frames), cond, "left_anti")
-            df = df.drop("__added_at")
-        return df
 
     def _read_snapshot(
         self,
@@ -5748,7 +5511,7 @@ class LakehouseTable:
             with_meta=True,
             renames=renames,
         )
-        df = self._apply_deletes(spark, df, manifest, deletes)
+        df = apply_deletes(spark, df, manifest, deletes)
         return df.drop("__file", "__pos")
 
     def delete_where_mor(
@@ -5786,7 +5549,7 @@ class LakehouseTable:
         if not cand:
             return base
         df = self._read_files(spark, cand, with_meta=True)
-        df = self._apply_deletes(
+        df = apply_deletes(
             spark, df, manifest, snap.get("deletes", [])
         )
         matches = df.where(condition).select(
@@ -5812,60 +5575,6 @@ class LakehouseTable:
         self._fire_commit_hooks("delete", snap_id)
         return snap_id
 
-    def _eq_candidate_files(
-        self,
-        manifest: dict,
-        snap: dict,
-        eqs: list[str],
-        skip: set | frozenset = frozenset(),
-    ) -> set:
-        """Data files an equality-delete tail may void rows in:
-        scoped by each delete's added_at watermark, pruned by footer
-        min/max intersection between the data file's key range and
-        the delete file's key range (``eq_delete_may_hit`` —
-        conservative on NULLs/missing stats: the delete file's own
-        footer min/max bounds the key set, but min/max EXCLUDE
-        nulls and the read overlay matches NULL keys via eqNullSafe,
-        so a delete holding a NULL key must not skip files that
-        also hold NULLs). Shared by ``materialize_deletes`` and
-        ``rewrite_position_deletes(resolve_equality=True)`` so the
-        two can never disagree about which files a delete may
-        touch. ``skip``: files already known affected."""
-        meta = manifest.get("delete_meta", {})
-        added = manifest.get("file_added_at", {})
-        fstats = manifest.get("file_stats", {})
-        out: set[str] = set()
-        for p in eqs:
-            keys = meta[p]["keys"]
-            applies = meta[p]["applies_to"]
-            dstats = self._file_stats([p]).get(p, {})
-            dnulls = self._file_null_counts([p]).get(p, {})
-            d_has_null = {
-                k: bool(dnulls.get(k, 1)) or dnulls.get(k) is None
-                for k in keys
-            }
-            for f in snap["files"]:
-                if f in out or f in skip:
-                    continue
-                if added.get(f, 0) > applies:
-                    continue  # appended after the delete: out of scope
-                per = fstats.get(f, {})
-                fnulls_memo: list = []
-
-                def fnulls_fn(f=f, memo=fnulls_memo):
-                    # lazily-read footer null counts, once per file
-                    if not memo:
-                        memo.append(
-                            self._file_null_counts([f]).get(f, {})
-                        )
-                    return memo[0]
-
-                if eq_delete_may_hit(
-                    keys, d_has_null, dstats, per, fnulls_fn
-                ):
-                    out.add(f)
-        return out
-
     def materialize_deletes(self, spark: SparkSession) -> int:
         """Targeted delete materialization (Iceberg's
         rewrite_position_delete_files / delete-aware
@@ -5878,14 +5587,16 @@ class LakehouseTable:
         O(table) rewrite even at cleanup time; this costs
         O(affected files).
 
-        Affected files: position deletes name theirs outright (read
-        from the metadata-sized delete files); equality deletes
-        bound candidates by the added_at watermark, then prune by
-        footer min/max intersection between each data file's key
-        range and the delete file's key range (conservative — a
-        range overlap without a key match just rewrites a file to
-        identical content, never misses a deletion). Returns the new
-        snapshot id (the current one when nothing is outstanding)."""
+        Affected files come from ``plan_deletes``: position deletes
+        and deletion vectors name theirs outright; equality deletes
+        are scoped by the added_at watermark and pruned by footer
+        key ranges (conservative — a range overlap without a key
+        match just rewrites a file to identical content, never
+        misses a deletion). A by-reference position file's row-group
+        stats only bound the files it names, so its exact names are
+        read — the rewrite touches exactly the named files. Returns
+        the new snapshot id (the current one when nothing is
+        outstanding)."""
         manifest = self._read_manifest()
         snaps = manifest["snapshots"]
         if not snaps:
@@ -5895,49 +5606,31 @@ class LakehouseTable:
         deletes = snap.get("deletes", [])
         if not deletes:
             return base
-        meta = manifest.get("delete_meta", {})
-        added = manifest.get("file_added_at", {})
-        fstats = manifest.get("file_stats", {})
-        pos = [
-            p
-            for p in deletes
-            if meta.get(p, {}).get("kind", "position") == "position"
-        ]
-        eqs = [
-            p
-            for p in deletes
-            if meta.get(p, {}).get("kind") == "equality"
-        ]
-        dvs = [
-            p
-            for p in deletes
-            if meta.get(p, {}).get("kind") == "dv"
-        ]
-        affected: set[str] = set()
-        if pos:
-            affected.update(
+        plan = plan_deletes(manifest, deletes, snap["files"])
+        refs = sorted({d for fd in plan.values() for d in fd.pos_refs})
+        named = (
+            {
                 r.file_path
-                for r in spark.read.parquet(*pos)
+                for r in spark.read.parquet(*refs)
                 .select("file_path")
                 .distinct()
                 .collect()
-            )
-        if dvs:
-            # a deletion vector names its affected files in its own
-            # file_path column — metadata-sized, one row per file
-            for p in dvs:
-                affected.update(dv_affected_files(p))
-        affected |= self._eq_candidate_files(
-            manifest, snap, eqs, skip=affected
+            }
+            if refs
+            else set()
         )
-        affected &= set(snap["files"])
+        affected = {
+            f
+            for f, fd in plan.items()
+            if fd.pos or fd.dv_refs or fd.eq or f in named
+        }
         carried = [f for f in snap["files"] if f not in affected]
         new_files: list[str] = []
         if affected:
             df = self._read_files(
                 spark, sorted(affected), with_meta=True
             )
-            df = self._apply_deletes(spark, df, manifest, deletes)
+            df = apply_deletes(spark, df, manifest, deletes)
             new_files = self._write_data(
                 df.drop("__file", "__pos"),
                 spec=manifest.get("partition_by", self.partition_by),
@@ -6004,21 +5697,9 @@ class LakehouseTable:
             raise ValueError("empty table")
         snap = snaps[-1]
         base = snap["id"]
-        meta = manifest.get("delete_meta", {})
         tail = snap.get("deletes", [])
-        pos = [
-            d
-            for d in tail
-            if meta.get(d, {}).get("kind", "position") == "position"
-        ]
-        dvs = [
-            d for d in tail if meta.get(d, {}).get("kind") == "dv"
-        ]
-        eqs = [
-            d
-            for d in tail
-            if meta.get(d, {}).get("kind") == "equality"
-        ]
+        kinds = by_kind(manifest, tail)
+        pos, dvs, eqs = kinds["position"], kinds["dv"], kinds["equality"]
         src = pos + dvs
         resolving = resolve_equality and bool(eqs)
         if not resolving:
@@ -6032,83 +5713,35 @@ class LakehouseTable:
                 # by-reference readers prune loosely forever
                 if dvs or pos_delete_file_clustered(src[0]):
                     return base
-        frames = None
-        if pos:
-            frames = spark.read.parquet(*pos).select(
-                "file_path", "pos"
-            )
-        if dvs:
-            decoded = dv_coordinates(spark, dvs)
-            frames = (
-                decoded
-                if frames is None
-                else frames.unionByName(decoded)
-            )
+        frames = coordinate_frame(spark, manifest, src)
         if resolving:
             # resolve each equality delete into the exact (file,
             # pos) coordinates the read overlay would void: scan
-            # only the watermark/key-range candidate files, then
-            # re-apply `_apply_deletes`' matching rule (added_at
-            # scoping with missing→survives, NULL-safe key
-            # equality) as a semi join per key group
+            # only the planner's candidate files, then apply the
+            # overlay's own matching rule as a semi join
             cand = sorted(
-                self._eq_candidate_files(manifest, snap, eqs)
-                & set(snap["files"])
+                f
+                for f, fd in plan_deletes(
+                    manifest, eqs, snap["files"]
+                ).items()
+                if fd.eq
             )
             if cand:
-                from collections import defaultdict
-
-                cdf = self._read_files(
-                    spark, cand, with_meta=True
+                matched = eq_delete_join(
+                    spark,
+                    self._read_files(spark, cand, with_meta=True),
+                    manifest,
+                    eqs,
+                    "left_semi",
+                ).select(
+                    F.col("__file").alias("file_path"),
+                    F.col("__pos").alias("pos"),
                 )
-                added = manifest.get("file_added_at", {})
-                amap = spark.createDataFrame(
-                    [(f, int(a)) for f, a in added.items()],
-                    schema="__file_a string, __added_at long",
+                frames = (
+                    matched
+                    if frames is None
+                    else frames.unionByName(matched)
                 )
-                cdf = cdf.join(
-                    F.broadcast(amap),
-                    F.col("__file") == F.col("__file_a"),
-                    "left",
-                ).drop("__file_a")
-                by_keys: dict[tuple, list[str]] = defaultdict(list)
-                for p in eqs:
-                    by_keys[tuple(meta[p]["keys"])].append(p)
-                for keys, paths in by_keys.items():
-                    dframes = None
-                    for p in paths:
-                        d = spark.read.parquet(p).select(
-                            *[
-                                F.col(k).alias(f"__eq_{k}")
-                                for k in keys
-                            ],
-                            F.lit(
-                                int(meta[p]["applies_to"])
-                            ).alias("__eq_applies"),
-                        )
-                        dframes = (
-                            d
-                            if dframes is None
-                            else dframes.unionByName(d)
-                        )
-                    cond = F.coalesce(
-                        F.col("__added_at"), F.lit(2**62)
-                    ) <= F.col("__eq_applies")
-                    for k in keys:
-                        cond = cond & F.col(k).eqNullSafe(
-                            F.col(f"__eq_{k}")
-                        )
-                    matched = cdf.join(
-                        F.broadcast(dframes), cond, "left_semi"
-                    ).select(
-                        F.col("__file").alias("file_path"),
-                        F.col("__pos").alias("pos"),
-                    )
-                    frames = (
-                        matched
-                        if frames is None
-                        else frames.unionByName(matched)
-                    )
         if frames is None:
             # eq deletes resolved to zero candidates and no position
             # sources: the tail empties outright
@@ -6270,7 +5903,7 @@ class LakehouseTable:
                 schema_json=br.get("schema"),
                 with_meta=True,
             )
-            df = self._apply_deletes(spark, df, manifest, base_deletes)
+            df = apply_deletes(spark, df, manifest, base_deletes)
             return df.drop("__file", "__pos")
         if tag is not None:               # resolution stay consistent
             if snapshot_id is not None:
@@ -6279,16 +5912,9 @@ class LakehouseTable:
             if tag not in tags:
                 raise SnapshotNotFoundError(f"tag {tag!r} not found")
             snapshot_id = tags[tag]
-        snaps = manifest["snapshots"]
-        if not snaps:
+        if not manifest["snapshots"]:
             raise ValueError(f"no snapshots in {self.path}")
-        if snapshot_id is None:
-            snap = snaps[-1]
-        else:
-            matches = [s for s in snaps if s["id"] == snapshot_id]
-            if not matches:
-                raise SnapshotNotFoundError(f"snapshot {snapshot_id} not found")
-            snap = matches[0]
+        snap = _snapshot(manifest, snapshot_id)
         if use_snapshot_schema:
             return self._read_snapshot(
                 spark,
@@ -6339,9 +5965,7 @@ class LakehouseTable:
         the hive-path values in the manifest (no footer needed) —
         partition pruning runs first, then footer stats skip within
         the surviving partitions."""
-        manifest = self._read_manifest()
-        snap = self._prune_snapshot(manifest, snapshot_id)
-        return self._pruned_files_for(manifest, snap, ranges, {})
+        return self.pruned_files_any([ranges], snapshot_id)
 
     def pruned_files_any(
         self,
@@ -6354,7 +5978,9 @@ class LakehouseTable:
         point range; per-probe manifest parses would turn planning
         into a scan of its own). File order follows the snapshot."""
         manifest = self._read_manifest()
-        snap = self._prune_snapshot(manifest, snapshot_id)
+        snap = _snapshot(manifest, snapshot_id)
+        if snap is None:
+            return []  # empty table: nothing to keep
         blob_cache: dict[str, dict | None] = {}
         keep: set = set()
         for ranges in probes:
@@ -6364,16 +5990,6 @@ class LakehouseTable:
                 )
             )
         return [f for f in snap["files"] if f in keep]
-
-    def _prune_snapshot(self, manifest: dict, snapshot_id: int | None):
-        snaps = manifest["snapshots"]
-        if not snaps:
-            raise ValueError(f"no snapshots in {self.path}")
-        return (
-            snaps[-1]
-            if snapshot_id is None
-            else next(s for s in snaps if s["id"] == snapshot_id)
-        )
 
     def _pruned_files_for(
         self,
@@ -6537,18 +6153,12 @@ class LakehouseTable:
             df = self.read(spark, snapshot_id)
         else:
             manifest = self._read_manifest()
-            snaps = manifest["snapshots"]
-            snap = (
-                snaps[-1]
-                if snapshot_id is None
-                else next(s for s in snaps if s["id"] == snapshot_id)
-            )
-            deletes = snap.get("deletes", [])
+            deletes = _snapshot(manifest, snapshot_id).get("deletes", [])
             if deletes:
                 # merge-on-read overlay on the pruned subset: position
                 # deletes naming pruned-out files simply never match
                 df = self._read_files(spark, files, with_meta=True)
-                df = self._apply_deletes(spark, df, manifest, deletes)
+                df = apply_deletes(spark, df, manifest, deletes)
                 df = df.drop("__file", "__pos")
             else:
                 df = self._read_files(spark, files)
@@ -6589,17 +6199,6 @@ class LakehouseTable:
         "files", "delete_files", "snapshots", "partitions", "refs",
         "manifest", "schema",
     )
-
-    def _snapshot_entry(self, snapshot_id: int | None) -> dict | None:
-        snaps = self.snapshots
-        if not snaps:
-            return None
-        if snapshot_id is None:
-            return snaps[-1]
-        for s in snaps:
-            if s["id"] == snapshot_id:
-                return s
-        raise SnapshotNotFoundError(f"snapshot {snapshot_id} not found")
 
     def _size_of(self, path: str, manifest: dict | None = None) -> int | None:
         """Byte size from the manifest's recorded file_sizes when
@@ -6730,13 +6329,7 @@ class LakehouseTable:
                 ren = column_rename_map(manifest) or {}
                 dropped = manifest.get("dropped_columns", [])
             else:
-                if not any(
-                    s["id"] == snapshot_id
-                    for s in manifest["snapshots"]
-                ):
-                    raise SnapshotNotFoundError(
-                        f"snapshot {snapshot_id} not found"
-                    )
+                _snapshot(manifest, snapshot_id)  # raises if absent
                 sj = self._schema_as_of(manifest, snapshot_id)
                 ren = self._renames_as_of(manifest, snapshot_id) or {}
                 # a name is retired:dropped AS OF the snapshot iff it
@@ -6842,7 +6435,7 @@ class LakehouseTable:
                 ))
             return spark.createDataFrame(rows, schema)
 
-        snap = self._snapshot_entry(snapshot_id)
+        snap = _snapshot(manifest, snapshot_id)
         file_rows = manifest.get("file_rows", {})
 
         if kind == "delete_files":
@@ -6862,7 +6455,7 @@ class LakehouseTable:
             rows = []
             for d in (snap or {}).get("deletes", []):
                 m = dmeta.get(d, {})
-                kind = m.get("kind", "position")
+                kind = delete_kind(manifest, d)
                 rows.append((
                     d,
                     kind,

@@ -37,6 +37,11 @@ Row-PRESERVING rewrites (compaction / delete materialization, stamped
 ``data_change=False`` — Delta's dataChange flag) are SKIPPED instead:
 the stream rides through ``maintain()`` emitting nothing for them.
 
+Merge-on-read delete tails are never interpreted here: the batch
+overlay and the change feed's delete pre-images both take each data
+file's share of a tail from ``sinks/deletes.py`` (``plan_deletes`` on
+the driver, ``voided_mask`` on the executor).
+
 The SINK half (``df.writeStream.format("lakehouse")``) is the same
 connector in reverse: executors stream Arrow RecordBatches straight
 into staged parquet files under the table (one file per task, no
@@ -81,6 +86,14 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
+from biglake_iceberg_pipeline_spark.sinks.deletes import (
+    FileDeletes,
+    by_kind,
+    delete_kind,
+    plan_deletes,
+    voided_mask,
+)
+
 
 @dataclass
 class _FilePartition(InputPartition):
@@ -96,26 +109,8 @@ class _FilePartition(InputPartition):
     renames: dict | None = None
     # merge-on-read overlay for an unmaterialized delete tail (batch
     # reads only; the streaming source diffs tails per snapshot
-    # instead): row positions of THIS file voided by position-delete
-    # files, shipped in the partition payload (delete files are
-    # metadata-sized — the same contract that ships part_values and
-    # renames), and the equality-delete files whose added_at
-    # watermark + footer key ranges say they may void rows here
-    drop_pos: tuple = ()
-    # ((delete_file, (key_col, ...)), ...) — executor re-matches via
-    # the NULL-safe composite-key is_in (_eq_match_mask)
-    eq_deletes: tuple = ()
-    # position-delete files past the inline threshold, shipped by
-    # REFERENCE (VERDICT r12 item 3): the executor reads its own
-    # file's voided positions with a file_path filter instead of the
-    # driver serializing O(tail) positions into every task payload —
-    # the Iceberg-v3 deletion-vector shape, by parquet filter
-    pos_refs: tuple = ()
-    # deletion-vector blob files (rewrite_position_deletes(as_dv=
-    # True)) that name THIS file: the executor reads its single
-    # (file_path, dv) row and decodes the delta+deflate blob —
-    # always by reference, O(1) payload under any tail size
-    dv_refs: tuple = ()
+    # instead): this file's share of the tail from ``plan_deletes``
+    deletes: FileDeletes = FileDeletes()
 
 
 @dataclass
@@ -145,133 +140,28 @@ class _EqDeletePartition(InputPartition):
 
     data_file: str
     part_values: dict
-    # [(delete_file, [key_col, ...]), ...] — this commit's new
-    # equality delete files; a row matching ANY of them emits once
-    eq_deletes: list
+    # this commit's new equality deletes in scope for the file; a
+    # row matching ANY of them emits once
+    deletes: FileDeletes
     ctype: str
-    # rows of this file ALREADY voided by the tail as of the
-    # PREDECESSOR snapshot — they must not re-emit a delete
-    # pre-image when a later merge matches the same key:
-    prior_pos: tuple = ()  # row indices from earlier position deletes
-    prior_eq: tuple = ()  # earlier ((delete_file, keys), ...) in scope
-    # earlier deletion-vector blob files that may name this data
-    # file, shipped by REFERENCE (the executor decodes only its own
-    # file's blob row) — a consolidated 10⁸-position DV must not be
-    # decoded driver-side into every candidate payload
-    prior_dv: tuple = ()
+    # this file's share of the PREDECESSOR snapshot's tail: rows it
+    # already voided must not re-emit a delete pre-image when a later
+    # merge matches the same key
+    prior: FileDeletes = FileDeletes()
     renames: dict | None = None  # rename-journal map (overlay)
-
-
-#: position-delete files with at most this many rows inline their
-#: voided positions into the partition payloads (cheap, zero extra
-#: executor I/O); bigger tails ship by REFERENCE so the driver never
-#: serializes O(tail) positions into task payloads — a 10⁸-row
-#: unmaterialized delete would otherwise push fat payloads through
-#: the scheduler on a 100 TB table (VERDICT r12 item 3). maintain()
-#: bounds how long any tail lives either way.
-_POS_INLINE_MAX = 100_000
-
-
-def _pos_delete_candidates(pf, planned):
-    """Planned data files a by-reference position-delete file may
-    name, from row-group min/max statistics on ``file_path`` alone —
-    metadata-sized work, no data read. A false positive costs one
-    executor a filtered read that returns nothing; missing stats keep
-    every planned file (conservative, never wrong)."""
-    names = list(pf.schema_arrow.names)
-    try:
-        idx = names.index("file_path")
-    except ValueError:
-        return set(planned)
-    md = pf.metadata
-    spans = []
-    for rg in range(md.num_row_groups):
-        st = md.row_group(rg).column(idx).statistics
-        if st is None or not st.has_min_max:
-            return set(planned)
-        lo, hi = st.min, st.max
-        if isinstance(lo, bytes):
-            lo, hi = lo.decode(), hi.decode()
-        spans.append((lo, hi))
-    return {
-        f for f in planned if any(lo <= f <= hi for lo, hi in spans)
-    }
-
-
-def _eq_delete_key_stats(dk, keys):
-    """Per-key NULL flag + non-NULL [min, max] over a delete file's
-    key table — exactly the inputs ``eq_delete_may_hit`` prunes
-    with. One implementation shared by the CDF planner and the batch
-    overlay planner so the two can never drift on how delete-file
-    stats are derived (r12 review)."""
-    dranges: dict = {}
-    dnulls: dict = {}
-    for k in keys:
-        vals = [v for v in dk.column(k).to_pylist() if v is not None]
-        dnulls[k] = dk.column(k).null_count > 0
-        dranges[k] = (min(vals), max(vals)) if vals else None
-    return dnulls, dranges
-
-
-def _eq_key_strings(tbl, keys: list[str]):
-    """NULL-safe composite key rendering for vectorized is_in
-    matching: per-column percent-escape of '%', the \\x1f separator,
-    and \\x00, NULL as a raw-\\x00 sentinel (the streaming sink's
-    grouping-key convention — no real value can collide), joined with
-    \\x1f. Both the data side and the delete side render identically,
-    so tuple equality (eqNullSafe semantics, NULL == NULL) becomes
-    string equality."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    parts = []
-    for k in keys:
-        col = pc.cast(tbl.column(k), pa.string())
-        col = pc.replace_substring(col, "%", "%25")
-        col = pc.replace_substring(col, "\x1f", "%1F")
-        col = pc.replace_substring(col, "\x00", "%00")
-        parts.append(
-            pc.fill_null(col, "\x00__NULL__").combine_chunks()
-        )
-    if len(parts) == 1:
-        return parts[0]
-    return pc.binary_join_element_wise(*parts, "\x1f")
-
-
-def _eq_match_mask(aligned, eq_deletes):
-    """OR of vectorized is_in matches against each delete file's
-    NULL-safe composite key rendering (False-filled)."""
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
-
-    mask = None
-    for del_file, keys in eq_deletes:
-        dels = pq.read_table(del_file, columns=list(keys))
-        if dels.num_rows == 0:
-            continue
-        data_keys = _eq_key_strings(aligned, list(keys))
-        del_keys = _eq_key_strings(dels, list(keys))
-        m = pc.is_in(data_keys, value_set=del_keys.unique())
-        mask = m if mask is None else pc.or_(mask, m)
-    if mask is None:
-        return None
-    return pc.fill_null(mask, False)
 
 
 def _mor_overlay_batches(
     partition: _FilePartition, target, project_names=None
 ):
     """One data file with its merge-on-read delete tail applied —
-    the executor half of the batch connector's MoR overlay (the
-    native ``LakehouseTable._apply_deletes`` re-expressed per file:
-    position deletes drop the named row indices, equality deletes
-    drop key matches via the shared NULL-safe is_in). Work is
+    the executor half of the batch connector's MoR overlay
+    (``voided_mask`` over the file's ``FileDeletes``). Work is
     O(file rows + its deletes); files the planner proved untouched
     never take this path. ``project_names`` drops helper columns
     after masking — a ``columns``-projected read still reads the
     equality-delete KEY columns (the match needs them), then
     projects them away."""
-    import numpy as np
     import pyarrow as pa
 
     aligned = _overlay_table(
@@ -280,54 +170,8 @@ def _mor_overlay_batches(
         target,
         partition.renames,
     )
-    n = aligned.num_rows
-    alive = np.ones(n, dtype=bool)
-    for pos in partition.drop_pos:
-        if 0 <= pos < n:
-            alive[pos] = False
-    for d in getattr(partition, "pos_refs", ()):
-        # by-reference tail (big position deletes): pull exactly this
-        # file's voided positions with a pushed file_path filter —
-        # pyarrow prunes row groups by the column's stats, then
-        # row-filters; a false-positive candidate reads nothing
-        import pyarrow.parquet as _pq
-
-        refs = _pq.read_table(
-            d,
-            columns=["pos"],
-            filters=[("file_path", "==", partition.file)],
-        )
-        for pos in refs.column("pos").to_pylist():
-            if 0 <= pos < n:
-                alive[pos] = False
-    for d in getattr(partition, "dv_refs", ()):
-        # deletion-vector tail: this file's single (file_path, dv)
-        # row, blob decoded to the voided positions (numpy cumsum —
-        # no per-position Python loop)
-        import pyarrow.parquet as _pq
-
-        from biglake_iceberg_pipeline_spark.sinks.lakehouse import (
-            decode_dv,
-        )
-
-        refs = _pq.read_table(
-            d,
-            columns=["dv"],
-            filters=[("file_path", "==", partition.file)],
-        )
-        for blob in refs.column("dv").to_pylist():
-            voided = decode_dv(blob)
-            voided = voided[(voided >= 0) & (voided < n)]
-            alive[voided] = False
-    if partition.eq_deletes:
-        mask = _eq_match_mask(aligned, list(partition.eq_deletes))
-        if mask is not None:
-            alive &= ~np.asarray(
-                mask.combine_chunks()
-                if isinstance(mask, pa.ChunkedArray)
-                else mask
-            )
-    out = aligned.filter(pa.array(alive))
+    voided = voided_mask(aligned, partition.file, partition.deletes)
+    out = aligned.filter(pa.array(~voided))
     if project_names is not None:
         out = out.select(list(project_names))
     yield from out.to_batches()
@@ -335,15 +179,11 @@ def _mor_overlay_batches(
 
 def _eq_preimage_batches(partition: _EqDeletePartition, target):
     """Rows of one candidate data file voided by an equality-delete
-    commit, emitted as delete pre-images. The delete files are
-    metadata-sized; the match is a vectorized is_in on the NULL-safe
-    composite key rendering. Rows ALREADY voided by the tail as of
-    the predecessor snapshot (prior position/equality entries) are
-    masked out first — a later merge matching the same key must not
-    double-emit their deletion."""
-    import numpy as np
+    commit, emitted as delete pre-images. Rows ALREADY voided by the
+    tail as of the predecessor snapshot are masked out first — a
+    later merge matching the same key must not double-emit their
+    deletion."""
     import pyarrow as pa
-    import pyarrow.compute as pc
 
     aligned = _overlay_table(
         partition.data_file,
@@ -351,45 +191,13 @@ def _eq_preimage_batches(partition: _EqDeletePartition, target):
         target,
         getattr(partition, "renames", None),
     )
-    n = aligned.num_rows
-    alive = np.ones(n, dtype=bool)
-    for pos in partition.prior_pos:
-        if 0 <= pos < n:
-            alive[pos] = False
-    for d in getattr(partition, "prior_dv", ()):
-        # prior deletion vector by reference: this file's single
-        # blob row, decoded to its voided positions
-        import pyarrow.parquet as _pq
-
-        from biglake_iceberg_pipeline_spark.sinks.lakehouse import (
-            decode_dv,
-        )
-
-        refs = _pq.read_table(
-            d,
-            columns=["dv"],
-            filters=[("file_path", "==", partition.data_file)],
-        )
-        for blob in refs.column("dv").to_pylist():
-            voided = decode_dv(blob)
-            voided = voided[(voided >= 0) & (voided < n)]
-            alive[voided] = False
-    if partition.prior_eq:
-        prior = _eq_match_mask(aligned, list(partition.prior_eq))
-        if prior is not None:
-            alive &= ~np.asarray(
-                prior.combine_chunks()
-                if isinstance(prior, pa.ChunkedArray)
-                else prior
-            )
-    mask = _eq_match_mask(aligned, partition.eq_deletes)
-    if mask is None:
-        return
-    final = pc.and_(pa.array(alive), mask)
-    matched = aligned.filter(final)
-    if matched.num_rows:
+    f = partition.data_file
+    hit = voided_mask(aligned, f, partition.deletes) & ~voided_mask(
+        aligned, f, partition.prior
+    )
+    if hit.any():
         yield from _with_ctype(
-            matched, partition.ctype
+            aligned.filter(pa.array(hit)), partition.ctype
         ).to_batches()
 
 
@@ -618,17 +426,6 @@ def _dbg(msg: str) -> None:
             f.write(f"{os.getpid()} {time.monotonic():.3f} {msg}\n")
 
 
-def _read_manifest(path: str) -> dict:
-    # the one manifest reader (segmented format 2 + legacy) lives in
-    # sinks/lakehouse.py — the source must see exactly what the
-    # writers committed
-    from biglake_iceberg_pipeline_spark.sinks.lakehouse import (
-        load_manifest,
-    )
-
-    return load_manifest(path)
-
-
 class LakehouseStreamSource(DataSource):
     """``spark.readStream.format("lakehouse").option("path", p)``.
 
@@ -767,7 +564,11 @@ class LakehouseStreamSource(DataSource):
         return path
 
     def schema(self) -> StructType:
-        m = _read_manifest(self._path())
+        from biglake_iceberg_pipeline_spark.sinks.lakehouse import (
+            load_manifest,
+        )
+
+        m = load_manifest(self._path())
         branch = self.options.get("branch")
         schema_json = None
         if branch is not None:
@@ -1015,9 +816,6 @@ class LakehouseStreamReader(DataSourceStreamReader):
         _dbg(f"initialOffset -> {self._starting}")
         return {"snapshot_id": self._starting}
 
-    def _snaps(self) -> list[dict]:
-        return _read_manifest(self._path)["snapshots"]
-
     @staticmethod
     def _added_per_snapshot(
         snaps: list[dict], lo_idx: int, hi_idx: int
@@ -1034,7 +832,7 @@ class LakehouseStreamReader(DataSourceStreamReader):
         return out
 
     def _resolve_range(
-        self, snaps: list[dict], s0: int, s1: int, m: dict | None = None
+        self, snaps: list[dict], s0: int, s1: int, m: dict
     ) -> tuple[int, int]:
         """Indices (lo, hi) for the (s0, s1] snapshot range, with the
         same lineage guards as ``incremental_scan``: every id in
@@ -1099,7 +897,6 @@ class LakehouseStreamReader(DataSourceStreamReader):
                     "stream appends only"
                 )
             return lo, hi
-        dmeta = (m or {}).get("delete_meta", {})
         for idx in range(lo + 1, hi + 1):
             s = snaps[idx]
             prev = snaps[idx - 1] if idx > 0 else {"files": []}
@@ -1123,17 +920,13 @@ class LakehouseStreamReader(DataSourceStreamReader):
             else:
                 prev_tail = set(prev.get("deletes", []))
                 unknown = [
-                    d
+                    delete_kind(m, d)
                     for d in s.get("deletes", [])
                     if d not in prev_tail
-                    and dmeta.get(d, {}).get("kind", "position")
-                    not in ("position", "equality")
+                    and delete_kind(m, d) not in ("position", "equality")
                 ]
                 if unknown:
-                    bad = (
-                        "delete files of unknown kind "
-                        f"{[dmeta.get(d, {}).get('kind') for d in unknown]}"
-                    )
+                    bad = f"delete files of unknown kind {unknown}"
             if bad:
                 raise LineageBrokenError(
                     f"change feed cannot stream snapshot {s['id']}: "
@@ -1143,8 +936,12 @@ class LakehouseStreamReader(DataSourceStreamReader):
         return lo, hi
 
     def latestOffset(self) -> dict:
+        from biglake_iceberg_pipeline_spark.sinks.lakehouse import (
+            load_manifest,
+        )
+
         _dbg(f"latestOffset cursor={self._read_cursor()}")
-        m = _read_manifest(self._path)
+        m = load_manifest(self._path)
         snaps = m["snapshots"]
         if not snaps:
             return {"snapshot_id": self._starting}
@@ -1292,14 +1089,15 @@ class LakehouseStreamReader(DataSourceStreamReader):
             cur = self._read_cursor()
             if cur is None or s1 > cur:
                 self._advance_cursor(s1)
-        m = _read_manifest(self._path)
+        from biglake_iceberg_pipeline_spark.sinks.lakehouse import (
+            column_rename_map,
+            load_manifest,
+        )
+
+        m = load_manifest(self._path)
         snaps = m["snapshots"]
         lo, hi = self._resolve_range(snaps, s0, s1, m)
         fparts = m.get("file_partitions", {})
-        from biglake_iceberg_pipeline_spark.sinks.lakehouse import (
-            column_rename_map,
-        )
-
         renames = column_rename_map(m)
         declared = {
             f.name
@@ -1316,20 +1114,6 @@ class LakehouseStreamReader(DataSourceStreamReader):
 
         parts: list = []
         prev: dict = snaps[lo] if lo >= 0 else {"files": []}
-        prev_tail: set = set(prev.get("deletes", []))
-        # per-call cache: a batch spanning k MoR snapshots walks the
-        # (monotonically growing) prior tail per snapshot — without
-        # this, planning re-parses every delete parquet k times
-        _del_cache: dict = {}
-
-        def _read_del(path, columns):
-            key = (path, tuple(columns))
-            if key not in _del_cache:
-                import pyarrow.parquet as pq
-
-                _del_cache[key] = pq.read_table(path, columns=columns)
-            return _del_cache[key]
-
         for snap, added in self._added_per_snapshot(snaps, lo, hi):
             if snap.get("data_change") is False:
                 # row-preserving rewrite (compaction / delete
@@ -1338,7 +1122,6 @@ class LakehouseStreamReader(DataSourceStreamReader):
                 # carried state so the NEXT snapshot diffs against
                 # the post-rewrite file set and delete tail
                 prev = snap
-                prev_tail = set(snap.get("deletes", []))
                 continue
             if self._skip_changes and snap["operation"] != "append":
                 # Delta's skipChangeCommits: the whole row-changing
@@ -1347,7 +1130,6 @@ class LakehouseStreamReader(DataSourceStreamReader):
                 # but the carried file set advances so later appends
                 # diff against the post-rewrite state
                 prev = snap
-                prev_tail = set(snap.get("deletes", []))
                 continue
             is_update = snap["operation"] == "update"
             ins_label = (
@@ -1365,180 +1147,87 @@ class LakehouseStreamReader(DataSourceStreamReader):
                     )
                 )
             if self._cdf:
-                from biglake_iceberg_pipeline_spark.sinks.lakehouse import (  # noqa: E501
-                    eq_delete_may_hit,
+                parts += self._change_partitions(
+                    m, prev, snap, pv_for, renames
                 )
-
-                dmeta = m.get("delete_meta", {})
-                added_at = m.get("file_added_at", {})
-                fstats = m.get("file_stats", {})
-                del_label = (
-                    "update_preimage" if is_update else "delete"
-                )
-                cur_tail = snap.get("deletes", [])
-                # equality deletes of THIS commit, grouped so each
-                # candidate data file gets ONE partition (a row
-                # matching two delete files must emit once)
-                eq_new: list = []
-                pos_new = 0
-                for d in cur_tail:
-                    if d in prev_tail:
-                        continue
-                    meta = dmeta.get(d, {})
-                    if meta.get("kind", "position") == "position":
-                        pos_new += 1
-                        # learn the referenced data files driver-side
-                        # — delete files are metadata-sized — so only
-                        # their partition values ship to the executor
-                        refs = (
-                            _read_del(d, ["file_path"])
-                            .column("file_path")
-                            .to_pylist()
-                        )
-                        parts.append(
-                            _DeleteFilePartition(
-                                delete_file=d,
-                                part_values_by_file={
-                                    fp: pv_for(fp)
-                                    for fp in set(refs)
-                                },
-                                ctype=del_label,
-                                renames=renames,
-                            )
-                        )
-                    else:
-                        eq_new.append((d, meta))
-                if eq_new and pos_new:
-                    # eq-delete pre-images are masked only against the
-                    # PREDECESSOR tail: a commit carrying BOTH a new
-                    # position delete and a new equality delete could
-                    # void one row twice and double-emit its delete.
-                    # No current writer produces such a commit — fail
-                    # loudly instead of silently double-counting
-                    # (ADVICE r8); recover via the batch change_feed's
-                    # keyed diff.
-                    from biglake_iceberg_pipeline_spark.sinks.lakehouse import (  # noqa: E501
-                        LineageBrokenError,
-                    )
-
-                    raise LineageBrokenError(
-                        f"snapshot {snap['id']} introduces both "
-                        "position- and equality-delete files; the "
-                        "streaming change feed cannot attribute "
-                        "their overlap — re-baseline via the batch "
-                        "change_feed keyed diff"
-                    )
-                if eq_new:
-                    # prior tail state (as of the PREDECESSOR): rows
-                    # already voided must not re-emit as deletes
-                    prior_pos_by_file: dict[str, list] = {}
-                    prior_dv_by_file: dict[str, list] = {}
-                    prior_eq_entries: list = []
-                    for p in prev.get("deletes", []):
-                        pmeta = dmeta.get(p, {})
-                        if (
-                            pmeta.get("kind", "position")
-                            == "position"
-                        ):
-                            pt = _read_del(
-                                p, ["file_path", "pos"]
-                            )
-                            for fp, pos in zip(
-                                pt.column("file_path").to_pylist(),
-                                pt.column("pos").to_pylist(),
-                            ):
-                                prior_pos_by_file.setdefault(
-                                    fp, []
-                                ).append(pos)
-                        elif pmeta.get("kind") == "dv":
-                            # consolidated deletion vector in the
-                            # prior tail (a rewrite landed before
-                            # this range's merge): map affected
-                            # files from the blob's own file_path
-                            # column (metadata-sized) and ship the
-                            # blob by REFERENCE — decoding a 10⁸-
-                            # position vector driver-side into every
-                            # candidate payload would break the O(1)
-                            # payload contract the batch overlay
-                            # keeps
-                            pt = _read_del(p, ["file_path"])
-                            for fp in set(
-                                pt.column("file_path").to_pylist()
-                            ):
-                                prior_dv_by_file.setdefault(
-                                    fp, []
-                                ).append(p)
-                        else:
-                            prior_eq_entries.append(
-                                (
-                                    p,
-                                    list(pmeta.get("keys", [])),
-                                    pmeta.get("applies_to"),
-                                )
-                            )
-                    # candidates: predecessor files within every
-                    # delete's added_at watermark, pruned by footer
-                    # key ranges vs the delete file's key ranges
-                    # (NULL/unknown conservative) — the
-                    # materialize_deletes pruning, at planning time
-                    cand: dict[str, list] = {}
-                    for d, meta in eq_new:
-                        keys = list(meta.get("keys", []))
-                        applies = meta.get("applies_to")
-                        dnulls, dranges = _eq_delete_key_stats(
-                            _read_del(d, keys), keys
-                        )
-                        for f in prev["files"]:
-                            fa = added_at.get(f)
-                            if (
-                                applies is not None
-                                and fa is not None
-                                and fa > applies
-                            ):
-                                continue  # appended after the delete
-                            # shared with materialize_deletes so the
-                            # stream and the materializer can never
-                            # disagree about which files a delete
-                            # may touch (no lazy file-null getter
-                            # here: NULL delete keys keep the file)
-                            if eq_delete_may_hit(
-                                keys,
-                                dnulls,
-                                dranges,
-                                fstats.get(f, {}),
-                            ):
-                                cand.setdefault(f, []).append(
-                                    (d, keys)
-                                )
-                    for f, dels in sorted(cand.items()):
-                        fa = added_at.get(f)
-                        parts.append(
-                            _EqDeletePartition(
-                                data_file=f,
-                                part_values=pv_for(f),
-                                eq_deletes=dels,
-                                ctype=del_label,
-                                renames=renames,
-                                prior_pos=tuple(
-                                    prior_pos_by_file.get(f, ())
-                                ),
-                                prior_dv=tuple(
-                                    prior_dv_by_file.get(f, ())
-                                ),
-                                prior_eq=tuple(
-                                    (p, keys)
-                                    for p, keys, applies in (
-                                        prior_eq_entries
-                                    )
-                                    if applies is None
-                                    or fa is None
-                                    or fa <= applies
-                                ),
-                            )
-                        )
             prev = snap
-            prev_tail = set(snap.get("deletes", []))
         return parts
+
+    @staticmethod
+    def _change_partitions(m, prev, snap, pv_for, renames) -> list:
+        """Delete-side CDF partitions of one merge-on-read commit:
+        one ``_DeleteFilePartition`` per new position-delete file
+        (pre-images read back by coordinate), and one
+        ``_EqDeletePartition`` per candidate data file of its new
+        equality deletes — ``plan_deletes`` scopes the candidates
+        (watermark + key ranges) AND the predecessor tail each
+        candidate already carries, so rows voided earlier never
+        re-emit."""
+        import pyarrow.parquet as pq
+
+        from biglake_iceberg_pipeline_spark.sinks.lakehouse import (
+            LineageBrokenError,
+        )
+
+        label = (
+            "update_preimage"
+            if snap["operation"] == "update"
+            else "delete"
+        )
+        prev_tail = set(prev.get("deletes", []))
+        new = by_kind(
+            m, [d for d in snap.get("deletes", []) if d not in prev_tail]
+        )
+        if new["position"] and new["equality"]:
+            # eq-delete pre-images are masked only against the
+            # PREDECESSOR tail: a commit carrying BOTH a new position
+            # delete and a new equality delete could void one row
+            # twice and double-emit its delete. No current writer
+            # produces such a commit — fail loudly instead of
+            # silently double-counting (ADVICE r8); recover via the
+            # batch change_feed's keyed diff.
+            raise LineageBrokenError(
+                f"snapshot {snap['id']} introduces both "
+                "position- and equality-delete files; the streaming "
+                "change feed cannot attribute their overlap — "
+                "re-baseline via the batch change_feed keyed diff"
+            )
+        parts: list = []
+        for d in new["position"]:
+            # learn the referenced data files driver-side — delete
+            # files are metadata-sized — so only their partition
+            # values ship to the executor
+            refs = pq.read_table(d, columns=["file_path"]).column(
+                "file_path"
+            )
+            parts.append(
+                _DeleteFilePartition(
+                    delete_file=d,
+                    part_values_by_file={
+                        fp: pv_for(fp) for fp in set(refs.to_pylist())
+                    },
+                    ctype=label,
+                    renames=renames,
+                )
+            )
+        if new["equality"]:
+            # one partition per candidate file: a row matching two of
+            # the commit's delete files must emit once
+            cand = plan_deletes(m, new["equality"], prev["files"])
+            prior = plan_deletes(m, prev.get("deletes", []), sorted(cand))
+            for f in sorted(cand):
+                parts.append(
+                    _EqDeletePartition(
+                        data_file=f,
+                        part_values=pv_for(f),
+                        deletes=cand[f],
+                        ctype=label,
+                        renames=renames,
+                        prior=prior.get(f, FileDeletes()),
+                    )
+                )
+        return parts
+
 
     # --------------------------------------------------------- read
 
@@ -1594,20 +1283,21 @@ class LakehouseBatchReader(DataSourceReader):
     whole files, never rows.
 
     Snapshots with an unmaterialized merge-on-read delete tail read
-    correctly: the planner reads the (metadata-sized) delete files
-    driver-side and ships each data file its own overlay — voided
-    row positions directly, equality-delete files by reference,
-    scoped by the added_at watermark and pruned by footer key ranges
-    (``eq_delete_may_hit``, the same test materialize_deletes and
-    the CDF planner use) — so the executor pays O(its rows + its
-    deletes), mirroring ``LakehouseTable._apply_deletes``'s
-    broadcast anti-joins. The native ``LakehouseTable.read`` stays
-    the featureful path (branch reads, column pruning into the
-    parquet scan)."""
+    correctly: ``sinks/deletes.py``'s ``plan_deletes`` (the one
+    delete planner materialization and the change feed use too)
+    scopes the tail to the planned files, each partition ships its
+    file's ``FileDeletes``, and the executor masks with
+    ``voided_mask`` — O(its rows + its deletes), the per-file
+    counterpart of the native read's broadcast anti-joins. The
+    native ``LakehouseTable.read`` stays the featureful path (column
+    pruning into the parquet scan)."""
 
     def __init__(self, path: str, schema: StructType, options):
         from biglake_iceberg_pipeline_spark.sinks.lakehouse import (
             LakehouseTable,
+            _snapshot,
+            column_rename_map,
+            load_manifest,
         )
 
         self._path = path
@@ -1625,8 +1315,7 @@ class LakehouseBatchReader(DataSourceReader):
             )
         self._schema = schema
         self._arrow_schema = None
-        table = LakehouseTable(path)
-        m = _read_manifest(path)
+        m = load_manifest(path)
         branch = options.get("branch")
         if branch is not None:
             # BRANCH read (WAP staged state): the branch tail's file
@@ -1645,7 +1334,7 @@ class LakehouseBatchReader(DataSourceReader):
                     "branch read already uses the branch's staged "
                     "schema"
                 )
-            br = table._branch_state(m, branch)
+            br = LakehouseTable(path)._branch_state(m, branch)
             self._files = list(LakehouseTable._branch_tail_files(br))
             if not self._files:
                 raise ValueError(f"branch {branch!r} has no data")
@@ -1655,18 +1344,10 @@ class LakehouseBatchReader(DataSourceReader):
             self._snapshot_id = None
             snap = {"deletes": br.get("base_deletes", [])}
         else:
-            snapshot_id = _resolve_time_travel(options, path)
-            if snapshot_id is None:
-                snapshot_id = table.current_snapshot_id()
-                if snapshot_id is None:
-                    raise ValueError(f"no snapshots in {path}")
-            matches = [
-                s for s in m["snapshots"] if s["id"] == snapshot_id
-            ]
-            if not matches:
-                raise ValueError(f"snapshot {snapshot_id} not found")
-            snap = matches[0]
-            self._snapshot_id = snapshot_id
+            snap = _snapshot(m, _resolve_time_travel(options, path))
+            if snap is None:
+                raise ValueError(f"no snapshots in {path}")
+            self._snapshot_id = snap["id"]
             self._files = list(snap["files"])
         self._fparts = m.get("file_partitions", {})
         # committed CURRENT schema (pre-projection): a columns-
@@ -1675,16 +1356,15 @@ class LakehouseBatchReader(DataSourceReader):
         self._committed = StructType.fromJson(
             json.loads(m["schema"])
         ) if m.get("schema") else schema
-        # unmaterialized merge-on-read tail of THIS snapshot: planned
-        # into per-file overlays in partitions()
+        # unmaterialized merge-on-read tail of THIS snapshot, planned
+        # into per-file overlays in partitions() from just the
+        # manifest maps plan_deletes reads (the reader is pickled
+        # into every task)
         self._deletes = list(snap.get("deletes", []))
-        self._dmeta = m.get("delete_meta", {})
-        self._added_at = m.get("file_added_at", {})
-        self._fstats = m.get("file_stats", {})
-        from biglake_iceberg_pipeline_spark.sinks.lakehouse import (
-            column_rename_map,
-        )
-
+        self._tail_manifest = {
+            k: m.get(k, {})
+            for k in ("delete_meta", "file_added_at", "file_stats")
+        } if self._deletes else {}
         self._renames = (
             LakehouseTable._renames_as_of(m, self._snapshot_id)
             if _opt_flag(options, "useSnapshotSchema")
@@ -1810,18 +1490,15 @@ class LakehouseBatchReader(DataSourceReader):
                     )
                 )
                 files = [f for f in files if f in keep]
-        pos_by_file, eq_by_file, refs_by_file, dv_by_file = (
-            self._plan_delete_overlay(files)
-        )
+        # scoped to the PLANNED files only: a file pruned by pushed
+        # filters needs no overlay — deletes only remove rows
+        plan = plan_deletes(self._tail_manifest, self._deletes, files)
         keep = {f.name for f in self._schema.fields}
         # identity-partition values for eq-delete KEY columns must
         # ride the payload even when the projection dropped them —
         # the masked read needs the key readable to match
         keep |= {
-            k
-            for entries in eq_by_file.values()
-            for _d, keys in entries
-            for k in keys
+            k for fd in plan.values() for _d, keys in fd.eq for k in keys
         }
         return [
             _FilePartition(
@@ -1832,98 +1509,16 @@ class LakehouseBatchReader(DataSourceReader):
                     if k in keep
                 },
                 renames=self._renames,
-                drop_pos=tuple(sorted(pos_by_file.get(f, ()))),
-                eq_deletes=tuple(eq_by_file.get(f, ())),
-                pos_refs=tuple(refs_by_file.get(f, ())),
-                dv_refs=tuple(dv_by_file.get(f, ())),
+                deletes=plan.get(f, FileDeletes()),
             )
             for f in files
         ]
 
-    def _plan_delete_overlay(self, files: list):
-        """Driver-side half of the MoR overlay: read the snapshot's
-        (metadata-sized) delete files once and scope them to the
-        PLANNED files only (a file pruned by pushed filters needs no
-        overlay — deletes only remove rows). Position deletes up to
-        ``_POS_INLINE_MAX`` rows ship their row indices in the
-        partition payload; bigger tails ship by REFERENCE (scoped to
-        candidate files via row-group file_path stats), so a task
-        payload stays O(1) under any tail size — the Iceberg-v3
-        deletion-vector shape, by parquet filter. Actual deletion
-        vectors (``rewrite_position_deletes(as_dv=True)``, kind
-        'dv') map exactly: the blob file's own file_path column
-        lists the affected files, and each planned file gets the
-        blob path by reference. Equality deletes
-        ship by reference, kept only for files inside the delete's
-        added_at watermark (``LakehouseTable._apply_deletes``'s
-        sequence-number scoping: missing added_at → the file is
-        newer than any watermark and survives) whose footer key
-        ranges may intersect (``eq_delete_may_hit`` — shared with
-        materialize_deletes and the CDF planner)."""
-        pos_by_file: dict[str, list] = {}
-        eq_by_file: dict[str, list] = {}
-        refs_by_file: dict[str, list] = {}
-        dv_by_file: dict[str, list] = {}
-        if not self._deletes:
-            return pos_by_file, eq_by_file, refs_by_file, dv_by_file
-        import pyarrow.parquet as pq
-
-        from biglake_iceberg_pipeline_spark.sinks.lakehouse import (
-            eq_delete_may_hit,
-        )
-
-        planned = set(files)
-        for d in self._deletes:
-            meta = self._dmeta.get(d, {})
-            if meta.get("kind") == "dv":
-                # deletion vector: its file_path column IS the
-                # affected-file list (one row per file, metadata-
-                # sized) — exact mapping, no stats heuristics
-                from biglake_iceberg_pipeline_spark.sinks.lakehouse import (  # noqa: E501
-                    dv_affected_files,
-                )
-
-                for fp in dv_affected_files(d):
-                    if fp in planned:
-                        dv_by_file.setdefault(fp, []).append(d)
-                continue
-            if meta.get("kind", "position") == "position":
-                pf = pq.ParquetFile(d)
-                if pf.metadata.num_rows > _POS_INLINE_MAX:
-                    # big tail: ship the delete file by REFERENCE to
-                    # the planned files its row-group file_path stats
-                    # say it may name — the partition payload stays
-                    # O(1) regardless of tail size, and the executor
-                    # pulls exactly its own positions with a pushed
-                    # file_path filter
-                    for fp in _pos_delete_candidates(pf, planned):
-                        refs_by_file.setdefault(fp, []).append(d)
-                    continue
-                pt = pf.read(columns=["file_path", "pos"])
-                for fp, pos in zip(
-                    pt.column("file_path").to_pylist(),
-                    pt.column("pos").to_pylist(),
-                ):
-                    if fp in planned:
-                        pos_by_file.setdefault(fp, []).append(pos)
-                continue
-            keys = list(meta.get("keys", []))
-            applies = int(meta["applies_to"])
-            dnulls, dranges = _eq_delete_key_stats(
-                pq.read_table(d, columns=keys), keys
-            )
-            for f in files:
-                if self._added_at.get(f, 2**62) > applies:
-                    continue  # appended after the delete committed
-                if eq_delete_may_hit(
-                    keys, dnulls, dranges, self._fstats.get(f, {})
-                ):
-                    eq_by_file.setdefault(f, []).append(
-                        (d, tuple(keys))
-                    )
-        return pos_by_file, eq_by_file, refs_by_file, dv_by_file
-
     def read(self, partition: _FilePartition):
+        if partition is None:
+            # pushed filters pruned every file: Spark hands read()
+            # one default None partition
+            return
         batches = self._read_overlaid(partition)
         if self._ranges or self._in_lists:
             # ship only rows that can survive the pushed conjuncts
@@ -1938,16 +1533,11 @@ class LakehouseBatchReader(DataSourceReader):
 
         if self._arrow_schema is None:
             self._arrow_schema = to_arrow_schema(self._schema)
-        if (
-            partition.drop_pos
-            or partition.eq_deletes
-            or partition.pos_refs
-            or partition.dv_refs
-        ):
+        if partition.deletes:
             declared = [f.name for f in self._schema.fields]
             extra = [
                 k
-                for _d, keys in partition.eq_deletes
+                for _d, keys in partition.deletes.eq
                 for k in keys
                 if k not in declared
             ]
@@ -2097,7 +1687,11 @@ class _StagingWriterCore:
     ) -> None:
         self._path = path
         self._schema = schema
-        m = _read_manifest(path)
+        from biglake_iceberg_pipeline_spark.sinks.lakehouse import (
+            load_manifest,
+        )
+
+        m = load_manifest(path)
         spec = m.get("partition_by") or []
         opt = (
             [c.strip() for c in partition_opt.split(",") if c.strip()]
@@ -2451,9 +2045,8 @@ class LakehouseBatchWriter(_StagingWriterCore, DataSourceArrowWriter):
                 LakehouseTable,
             )
 
-            LakehouseTable(path)._branch_state(
-                _read_manifest(path), self._branch
-            )
+            table = LakehouseTable(path)
+            table._branch_state(table._read_manifest(), self._branch)
 
     def _evolved_branch_schema_json(self, table) -> str:
         br = table._branch_state(

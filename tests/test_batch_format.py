@@ -660,7 +660,7 @@ def test_big_position_tail_ships_by_reference(spark, tmp_path, monkeypatch):
 
     import pyarrow as pa
 
-    from biglake_iceberg_pipeline_spark.streaming import source as src
+    from biglake_iceberg_pipeline_spark.sinks import deletes as src
 
     monkeypatch.setattr(src, "_POS_INLINE_MAX", 100)
     path = str(tmp_path / "t")
@@ -677,8 +677,8 @@ def test_big_position_tail_ships_by_reference(spark, tmp_path, monkeypatch):
     assert len(parts) == 4
     got_ids = []
     for p in parts:
-        assert p.drop_pos == ()  # nothing inlined
-        assert p.pos_refs  # shipped by reference instead
+        assert p.deletes.pos == ()  # nothing inlined
+        assert p.deletes.pos_refs  # shipped by reference instead
         assert len(pickle.dumps(p)) < 2048  # O(1) payload
         tblchunk = pa.Table.from_batches(list(r.read(p)))
         got_ids += tblchunk.column("id").to_pylist()
@@ -687,7 +687,7 @@ def test_big_position_tail_ships_by_reference(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(src, "_POS_INLINE_MAX", 100_000)
     r2 = LakehouseBatchReader(path, schema, {})
     for p in r2.partitions():
-        assert p.pos_refs == () and p.drop_pos
+        assert p.deletes.pos_refs == () and p.deletes.pos
 
 
 def test_big_position_tail_end_to_end(spark, tmp_path):
@@ -705,7 +705,9 @@ def test_big_position_tail_end_to_end(spark, tmp_path):
     tbl.delete_where_mor(spark, F.col("id") % 2 == 0)  # 120k > 100k
     schema = tbl.read(spark).schema
     r = LakehouseBatchReader(path, schema, {})
-    assert all(p.pos_refs and not p.drop_pos for p in r.partitions())
+    assert all(
+        p.deletes.pos_refs and not p.deletes.pos for p in r.partitions()
+    )
     got = _connector_read(spark, path)
     assert got.count() == 120_000
     assert got.where("id % 2 = 0").count() == 0
